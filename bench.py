@@ -309,24 +309,23 @@ def main() -> None:
         runs = []
         qm = None
         for _ in range(repeats):
-            # eager queries (the incremental-index drains) execute most
-            # of their work inside builder() — localCheckpoint folds —
-            # so their timing/metrics window opens BEFORE the build
-            # (measure_lazy), or the bench would gate only the probe.
-            # Lazy queries keep collect-only timing: their builders'
-            # driver-side spark.read round-trips are ~0.2-0.4 s of
-            # plan-construction overhead a production pipeline pays
-            # once, not per query, and their frozen baseline rows were
-            # recorded collect-only — mixing the protocols inflated
-            # every lazy wall by that constant (round-12 isolated run).
-            if QUERIES[name].eager:
-                qm = collector.measure_lazy(
-                    name, lambda n=name: QUERIES[n].builder(spark, sf_dir)
+            # eager queries run Spark jobs inside builder(), so their
+            # timing/metrics window opens BEFORE the build, or the bench
+            # would gate only the probe. Lazy queries keep collect-only
+            # timing: their builders' driver-side spark.read round-trips
+            # are ~0.2-0.4 s of plan-construction overhead a production
+            # pipeline pays once, not per query, and their frozen
+            # baseline rows were recorded collect-only — mixing the
+            # protocols inflated every lazy wall by that constant
+            # (round-12 isolated run).
+            spec = QUERIES[name]
+            if spec.eager:
+                qm = collector.measure(
+                    name, lambda: spec.builder(spark, sf_dir)
                 )
             else:
-                qm = collector.measure(
-                    name, QUERIES[name].builder(spark, sf_dir)
-                )
+                df = spec.builder(spark, sf_dir)
+                qm = collector.measure(name, lambda: df)
             runs.append(round(qm.wall_s, 3))
         # lower-middle order statistic: the true median for odd n, the
         # smaller middle for even n (never the max — with n=2 the first

@@ -109,7 +109,7 @@ def main() -> None:
         t_build = _time.perf_counter()
         df = QUERIES[name].builder(spark, sf_dir)
         build_s = _time.perf_counter() - t_build
-        qm = collector.measure(name, df)
+        qm = collector.measure(name, lambda: df)
         d = qm.as_dict()
         out[name] = {
             "wall_s": round(d["wall_s"] + build_s, 2),

@@ -9,7 +9,7 @@ through the registries (O28) from the same env names (O29):
   STREAM_TYPE=memory_queue           sink (FileQueue dir via QUEUE_DIR)
   CHECKPOINT_DIR=<dir>               offset/state checkpoint (O18-O20)
   BATCH_SIZE / FLUSH_INTERVAL        rate cap / trigger (O15)
-  DRAIN_AND_EXIT=1                   availableNow mode (backfill/replay)
+  DRAIN_AND_EXIT=1                   drain the backlog, then exit
 
 Curation mode (PIPELINE=curation): stream a (doc_id, text) document feed
 through the continuous-curation sink instead — quality gates +
@@ -72,7 +72,9 @@ retrieval_index, retrieval_index_versioned):
                                      Exchange-free past broadcast size
   STATE_NUM_BUCKETS=<n>              bucket count (default 32)
 
-SIGINT/SIGTERM stop the query gracefully (O27): the in-flight epoch
+PIPELINE picks a launcher from MODES (an unknown value raises ValueError
+naming the valid modes); every mode shares one lifecycle in main().
+SIGINT/SIGTERM stop the queries gracefully (O27): the in-flight epoch
 commits, the buffer is never lost, resume continues from the checkpoint.
 
 Run:  python -m stream_cdc_spark.main
@@ -84,6 +86,8 @@ import os
 import re
 import signal
 import sys
+from dataclasses import dataclass
+from functools import partial
 
 from pyspark.sql import functions as F
 
@@ -91,102 +95,18 @@ from stream_cdc_spark.config import AppConfig
 from stream_cdc_spark.filters import FilterChain
 from stream_cdc_spark.session import get_spark
 from stream_cdc_spark.sinks.queue import FileQueue, foreach_batch_writer
-from stream_cdc_spark.sources import datasource_registry
+from stream_cdc_spark.sources import datasource_registry, sink_registry
 from stream_cdc_spark.streaming.pipeline import CdcPipeline
 
 
-def _curation_main(cfg, pipeline: str = "curation") -> int:
-    """PIPELINE=curation | lsh_dedup: a continuous document-feed pipeline
-    over a parquet directory — quality-gated dedup admission (curation)
-    or near-dup match emission via the snapshot-join LSH sink
-    (lsh_dedup). Same streaming scaffold, sink chosen by registry name."""
-    from stream_cdc_spark.sources import sink_registry
-
-    spark = get_spark(app_name=f"stream-cdc-spark-{pipeline}")
-    spark.sparkContext.setLogLevel(cfg.log_level)
-    docs_path = os.environ.get("DOCS_PATH", "/root/testdata/sf0.001")
-    state_dir = os.environ.get(
-        "CURATION_STATE_DIR", f"/tmp/stream-cdc-spark-{pipeline}"
-    )
-    ckpt = os.environ.get("CHECKPOINT_DIR", state_dir + "-ckpt")
-    drain = os.environ.get("DRAIN_AND_EXIT", "0") == "1"
-    min_tokens = int(os.environ.get("MIN_TOKENS", "5"))
-    # state-layer knobs: COMPACT_EVERY=<n batch dirs before a fold; 0
-    # disables>, COMPACT_MAJOR_EVERY=<K deltas before a full fold; 0 =
-    # single-level>, LSH_BUCKETED=1 publishes compacted LSH snapshots as
-    # bucketed tables (lsh_dedup mode only)
-    sink_kw = {
+def _compact_kw() -> dict:
+    """COMPACT_EVERY=<n batch dirs before a fold; 0 disables> and
+    COMPACT_MAJOR_EVERY=<K deltas before a full fold; 0 = single-level>:
+    the state-layer knobs every statedir-backed mode shares."""
+    return {
         "compact_every": int(os.environ.get("COMPACT_EVERY", "16")),
         "major_every": int(os.environ.get("COMPACT_MAJOR_EVERY", "0")),
     }
-    if pipeline == "lsh_dedup" and os.environ.get("LSH_BUCKETED", "0") == "1":
-        sink_kw["bucketed"] = True
-    # CLUSTER_STATE=1 (lsh_dedup mode): also maintain dedup-cluster
-    # membership — each batch's matches fold into the incremental
-    # union-find forest under clusters/, and the min-id representative
-    # is the survivorship pick (streaming/components.py)
-    if pipeline == "lsh_dedup" and os.environ.get("CLUSTER_STATE", "0") == "1":
-        sink_kw["cluster_state"] = True
-    # MEDIA_BLOB_COL=<col>: multimodal curation — the feed also carries a
-    # thumbnail blob column and the sink runs the q132 perceptual
-    # admission between the quality gate and text dedup
-    media_blob = os.environ.get("MEDIA_BLOB_COL", "")
-    if pipeline == "curation" and media_blob:
-        # the value is spliced verbatim into a readStream DDL schema
-        # string and select(); anything but a simple identifier would
-        # surface as a confusing parse error (or an unintended extra
-        # column) far from the env var — fail loudly here instead
-        if not re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", media_blob):
-            raise ValueError(
-                f"MEDIA_BLOB_COL must be a simple column identifier "
-                f"([A-Za-z_][A-Za-z0-9_]*), got {media_blob!r}"
-            )
-        sink_kw["media_blob_col"] = media_blob
-
-    sink = sink_registry.create(
-        pipeline, state_dir=state_dir, min_tokens=min_tokens, **sink_kw
-    )
-    # DOCS_PATH may be an sf dir (documents.parquet file inside, next to
-    # other tables with different schemas) or a directory of document
-    # parquet files (part-*.parquet). The streaming file source needs a
-    # directory, so glob-filter within the parent — but only narrow to
-    # 'documents.parquet' when the sf-dir layout is actually present;
-    # otherwise default to '*.parquet' so arbitrary feed layouts stream.
-    # DOCS_GLOB overrides either default.
-    default_glob = (
-        "documents.parquet"
-        if os.path.exists(os.path.join(docs_path, "documents.parquet"))
-        else "*.parquet"
-    )
-    docs_glob = os.environ.get("DOCS_GLOB", default_glob)
-    feed_schema = "doc_id bigint, text string"
-    feed_cols = ["doc_id", "text"]
-    if pipeline == "curation" and media_blob:
-        feed_schema += f", {media_blob} binary"
-        feed_cols.append(media_blob)
-    stream = (
-        spark.readStream.schema(feed_schema)
-        .option("pathGlobFilter", docs_glob)
-        .parquet(docs_path)
-        .select(*feed_cols)
-    )
-    writer = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", ckpt)
-    )
-    query = (
-        writer.trigger(availableNow=True) if drain else writer
-    ).start()
-
-    def _stop(signum, frame):
-        print(f"signal {signum}: stopping curation", file=sys.stderr)
-        query.stop()
-
-    signal.signal(signal.SIGINT, _stop)
-    signal.signal(signal.SIGTERM, _stop)
-    query.awaitTermination()
-    print(f"{pipeline} stopped; state at {state_dir}, checkpoint at {ckpt}")
-    return 0
 
 
 def _bucketed_kw() -> dict:
@@ -201,6 +121,28 @@ def _bucketed_kw() -> dict:
         "bucketed": True,
         "num_buckets": int(os.environ.get("STATE_NUM_BUCKETS", "32")),
     }
+
+
+def _feed_glob(path: str, table_file: str, env_name: str) -> str:
+    """The streaming file source needs a directory: narrow to
+    ``table_file`` when ``path`` is an sf dir holding it (next to tables
+    of other schemas), else '*.parquet' so arbitrary feed layouts
+    stream. ``env_name`` overrides either default."""
+    default = (
+        table_file
+        if os.path.exists(os.path.join(path, table_file))
+        else "*.parquet"
+    )
+    return os.environ.get(env_name, default)
+
+
+def _start(stream, sink_fn, ckpt: str, drain: bool):
+    """foreachBatch query over ``stream`` with its checkpoint; drain
+    mode uses the availableNow trigger."""
+    writer = stream.writeStream.foreachBatch(sink_fn).option(
+        "checkpointLocation", ckpt
+    )
+    return (writer.trigger(availableNow=True) if drain else writer).start()
 
 
 def _maybe_delete_stream(spark, state_dir: str, id_col: str, ckpt: str,
@@ -247,25 +189,19 @@ def _maybe_delete_stream(spark, state_dir: str, id_col: str, ckpt: str,
         def fb(df, bid, _fn=sink_fn, _src=src_col, _id=id_col):
             _fn(df.select(F.col(_src).cast("long").alias(_id)), bid)
     else:
-        tomb = TombstoneLog(
+        fb = TombstoneLog(
             os.path.join(state_dir, "tombstones"),
             store_col=id_col,
             source_col=src_col,
-            compact_every=int(os.environ.get("COMPACT_EVERY", "16")),
-            major_every=int(os.environ.get("COMPACT_MAJOR_EVERY", "0")),
-        )
-        fb = tomb.append
+            **_compact_kw(),
+        ).append
     stream = (
         spark.readStream.schema(f"{src_col} bigint")
         .option("pathGlobFilter", glob)
         .parquet(deletes_path)
         .select(src_col)
     )
-    writer = (
-        stream.writeStream.foreachBatch(fb)
-        .option("checkpointLocation", ckpt + "-deletes")
-    )
-    return (writer.trigger(availableNow=True) if drain else writer).start()
+    return _start(stream, fb, ckpt + "-deletes", drain)
 
 
 def _require_version_column(
@@ -295,18 +231,25 @@ def _require_version_column(
 
 
 def _await_streams(spark, queries, drain: bool) -> None:
-    """Await the mode's streaming queries. Drain mode: every
-    availableNow query must complete — await each (completion order is
-    irrelevant). Continuous mode with more than one query: a dead feed
-    must FAIL THE PIPELINE, not die silently behind the healthy one —
-    await ANY termination, stop the survivors, then re-await each so a
-    failed query's exception propagates (exit != 0). Without this, a
-    crashed DELETES_PATH stream would stop applying legally-required
-    deletions while admission kept running and looked healthy."""
+    """Await the mode's streaming queries — the one await path of every
+    mode. Drain mode: process everything each query's source has now,
+    then stop it (completion order is irrelevant). This holds for the
+    availableNow queries, which stop themselves, and for the cdc mode's
+    processing-time query (CdcPipeline.start doc). Continuous mode with
+    more than one query: a dead feed must FAIL THE PIPELINE, not die
+    silently behind the healthy one — await ANY termination, stop the
+    survivors, then re-await each so a failed query's exception
+    propagates (exit != 0). Without this, a crashed DELETES_PATH stream
+    would stop applying legally-required deletions while admission kept
+    running and looked healthy."""
     qs = [q for q in queries if q is not None]
-    if drain or len(qs) == 1:
+    if drain:
         for q in qs:
-            q.awaitTermination()
+            q.processAllAvailable()
+            q.stop()
+        return
+    if len(qs) == 1:
+        qs[0].awaitTermination()
         return
     # resetTerminated() runs AFTER the queries started, so a query that
     # died in that window is invisible to awaitAnyTermination (it would
@@ -329,183 +272,187 @@ def _await_streams(spark, queries, drain: bool) -> None:
         q.awaitTermination()
 
 
-def _ann_index_main(cfg, versioned: bool = False) -> int:
-    """PIPELINE=ann_index: continuous IVF index admission over a
-    (vec_id, embedding) parquet feed — same streaming scaffold as the
-    curation modes, embedding-feed schema and a required centroid set.
-    PIPELINE=ann_index_versioned: the CDC-native variant over a
-    (vec_id, version, embedding) UPSERT feed — re-embeddings supersede
-    prior vectors under the version-max read rule. A feed missing the
-    version column FAILS LOUDLY (best-effort column check, like the
-    DELETES_PATH guard); EMB_VERSION_COL= (explicitly empty) opts a
-    version-less feed in as version 0.
-    DELETES_PATH adds the deletion feed (_maybe_delete_stream)."""
-    from stream_cdc_spark.sources import sink_registry
+# Launchers: each builds one PIPELINE mode's queries and returns
+# (queries, where its output lives); main() owns the lifecycle. A mode's
+# deletion feed (and its loud column validation) starts BEFORE its admit
+# query: a failure after the admit query started would leak a running
+# orphan query (it keeps admitting after main() failed, and a retry trips
+# over its half-written checkpoint). Tombstones are reads-only
+# exclusion, so the start order never changes the final state.
 
-    mode = "ann_index_versioned" if versioned else "ann_index"
-    spark = get_spark(app_name="stream-cdc-spark-" + mode.replace("_", "-"))
-    spark.sparkContext.setLogLevel(cfg.log_level)
-    emb_path = os.environ.get("EMB_PATH", "/root/testdata/sf0.001")
-    state_dir = os.environ.get("ANN_STATE_DIR", "/tmp/stream-cdc-spark-ann")
-    ckpt = os.environ.get("CHECKPOINT_DIR", state_dir + "-ckpt")
-    drain = os.environ.get("DRAIN_AND_EXIT", "0") == "1"
-    sink = sink_registry.create(
-        mode,
-        state_dir=state_dir,
-        centroids_path=os.environ.get("CENTROIDS_PATH", ""),
-        compact_every=int(os.environ.get("COMPACT_EVERY", "16")),
-        major_every=int(os.environ.get("COMPACT_MAJOR_EVERY", "0")),
-        **_bucketed_kw(),
+
+def _cdc_main(spark, cfg, pipeline: str, drain: bool):
+    """PIPELINE=cdc (default): the reference pipeline — cdc_replay or
+    events_replay source -> filter chain -> FileQueue sink."""
+    ds_type = os.environ.get("DS_TYPE", "cdc_replay")
+    ds_path = os.environ.get(
+        "DS_PATH", "/root/testdata/sf0.001/events.parquet"
     )
-    default_glob = (
-        "embeddings.parquet"
-        if os.path.exists(os.path.join(emb_path, "embeddings.parquet"))
-        else "*.parquet"
-    )
-    emb_glob = os.environ.get("EMB_GLOB", default_glob)
-    ver = os.environ.get("EMB_VERSION_COL", "version")
-    versionless = versioned and not ver
-    if versioned and not versionless:
-        _require_version_column(
-            spark, emb_path, emb_glob, ver, "EMB_VERSION_COL",
-            "drop every re-embedding as a redelivery",
-        )
-    feed_schema = (
-        f"vec_id bigint, {ver} bigint, embedding array<float>"
-        if versioned and not versionless
-        else "vec_id bigint, embedding array<float>"
-    )
-    stream = (
-        spark.readStream.schema(feed_schema)
-        .option("pathGlobFilter", emb_glob)
-        .parquet(emb_path)
-    )
-    if versioned and not versionless:
-        stream = stream.select(
-            "vec_id",
-            F.coalesce(F.col(ver).cast("long"), F.lit(0)).alias("version"),
-            "embedding",
-        )
-    elif versioned:
-        stream = stream.select(
-            "vec_id", F.lit(0).cast("long").alias("version"), "embedding"
+    queue_dir = os.environ.get("QUEUE_DIR", "/tmp/stream-cdc-spark-queue")
+    ckpt = os.environ.get("CHECKPOINT_DIR", "/tmp/stream-cdc-spark-ckpt")
+    if ds_type == "cdc_replay":
+        source = datasource_registry.create(
+            ds_type, spark=spark, path=ds_path, batchEvents=cfg.batch_size * 1000
         )
     else:
-        stream = stream.select("vec_id", "embedding")
-    writer = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", ckpt)
+        source = datasource_registry.create(
+            ds_type, spark=spark, sf_dir=os.path.dirname(ds_path)
+        )
+    pipe = CdcPipeline(
+        spark,
+        source,
+        foreach_batch_writer(lambda: FileQueue(queue_dir)),
+        checkpoint_dir=ckpt,
+        config=cfg,
+        filters=FilterChain(),
     )
-    # the deletion feed (and its loud column validation) starts FIRST:
-    # a validation failure after the admit query started would leak a
-    # running orphan query into the session — it keeps admitting while
-    # main() has already failed, and a retry trips over its half-written
-    # checkpoint. Tombstones are reads-only exclusion, so the relative
-    # start order never changes the final state.
-    del_query = _maybe_delete_stream(spark, state_dir, "vec_id", ckpt, drain)
-    query = (writer.trigger(availableNow=True) if drain else writer).start()
-
-    def _stop(signum, frame):
-        print(f"signal {signum}: stopping {mode}", file=sys.stderr)
-        query.stop()
-        if del_query is not None:
-            del_query.stop()
-
-    signal.signal(signal.SIGINT, _stop)
-    signal.signal(signal.SIGTERM, _stop)
-    _await_streams(spark, [query, del_query], drain)
-    print(f"{mode} stopped; state at {state_dir}, checkpoint at {ckpt}")
-    return 0
+    query = pipe.start(available_now=drain)
+    return [query], f"queue at {queue_dir}, checkpoint at {ckpt}"
 
 
-def _retrieval_index_main(cfg, versioned: bool = False) -> int:
-    """PIPELINE=retrieval_index: continuous inverted-index (BM25/TF-IDF)
-    admission over a (doc_id, text) parquet feed — same streaming
-    scaffold as the ann_index mode (streaming/retrieval_index.py).
-    PIPELINE=retrieval_index_versioned: the CDC-native variant over a
-    (doc_id, version, text) UPSERT feed (updates supersede prior images
-    under the version-max read rule). A feed missing the version column
-    FAILS LOUDLY (best-effort column check, like the DELETES_PATH
-    guard); RETR_VERSION_COL= (explicitly empty) opts a version-less
-    feed in as version 0 (insert-only until updates appear).
-    DELETES_PATH adds the deletion feed (_maybe_delete_stream)."""
-    from stream_cdc_spark.sources import sink_registry
-
-    mode = "retrieval_index_versioned" if versioned else "retrieval_index"
-    spark = get_spark(app_name="stream-cdc-spark-" + mode.replace("_", "-"))
-    spark.sparkContext.setLogLevel(cfg.log_level)
+def _curation_main(spark, cfg, pipeline: str, drain: bool):
+    """PIPELINE=curation | lsh_dedup: a continuous document-feed pipeline
+    over a parquet directory — quality-gated dedup admission (curation)
+    or near-dup match emission via the snapshot-join LSH sink
+    (lsh_dedup). Same streaming scaffold, sink chosen by registry name."""
     docs_path = os.environ.get("DOCS_PATH", "/root/testdata/sf0.001")
-    state_dir = os.environ.get("RETR_STATE_DIR", "/tmp/stream-cdc-spark-retr")
+    state_dir = os.environ.get(
+        "CURATION_STATE_DIR", f"/tmp/stream-cdc-spark-{pipeline}"
+    )
     ckpt = os.environ.get("CHECKPOINT_DIR", state_dir + "-ckpt")
-    drain = os.environ.get("DRAIN_AND_EXIT", "0") == "1"
+    sink_kw = _compact_kw()
+    if pipeline == "lsh_dedup":
+        # LSH_BUCKETED=1 publishes compacted LSH snapshots as bucketed
+        # tables; CLUSTER_STATE=1 also maintains dedup-cluster
+        # membership — each batch's matches fold into the incremental
+        # union-find forest under clusters/, and the min-id
+        # representative is the survivorship pick (streaming/components.py)
+        if os.environ.get("LSH_BUCKETED", "0") == "1":
+            sink_kw["bucketed"] = True
+        if os.environ.get("CLUSTER_STATE", "0") == "1":
+            sink_kw["cluster_state"] = True
+    # MEDIA_BLOB_COL=<col> (curation mode): multimodal curation — the feed
+    # also carries a thumbnail blob column and the sink runs the q132
+    # perceptual admission between the quality gate and text dedup
+    media_blob = (
+        os.environ.get("MEDIA_BLOB_COL", "") if pipeline == "curation" else ""
+    )
+    feed_schema = "doc_id bigint, text string"
+    feed_cols = ["doc_id", "text"]
+    if media_blob:
+        # the value is spliced verbatim into a readStream DDL schema
+        # string and select(); anything but a simple identifier would
+        # surface as a confusing parse error (or an unintended extra
+        # column) far from the env var — fail loudly here instead
+        if not re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", media_blob):
+            raise ValueError(
+                f"MEDIA_BLOB_COL must be a simple column identifier "
+                f"([A-Za-z_][A-Za-z0-9_]*), got {media_blob!r}"
+            )
+        sink_kw["media_blob_col"] = media_blob
+        feed_schema += f", {media_blob} binary"
+        feed_cols.append(media_blob)
     sink = sink_registry.create(
-        mode,
+        pipeline,
         state_dir=state_dir,
-        compact_every=int(os.environ.get("COMPACT_EVERY", "16")),
-        major_every=int(os.environ.get("COMPACT_MAJOR_EVERY", "0")),
-        **_bucketed_kw(),
-    )
-    default_glob = (
-        "documents.parquet"
-        if os.path.exists(os.path.join(docs_path, "documents.parquet"))
-        else "*.parquet"
-    )
-    # RETR_VERSION_COL= (explicitly empty) opts a version-less feed into
-    # versioned mode: every row admits as version 0 (insert-only
-    # first-wins); otherwise the shared guard fails loudly on a feed
-    # missing the version column (_require_version_column doc).
-    ver = os.environ.get("RETR_VERSION_COL", "version")
-    versionless = versioned and not ver
-    docs_glob = os.environ.get("DOCS_GLOB", default_glob)
-    if versioned and not versionless:
-        _require_version_column(
-            spark, docs_path, docs_glob, ver, "RETR_VERSION_COL",
-            "drop every update as a redelivery",
-        )
-    feed_schema = (
-        f"doc_id bigint, {ver} bigint, text string"
-        if versioned and not versionless
-        else "doc_id bigint, text string"
+        min_tokens=int(os.environ.get("MIN_TOKENS", "5")),
+        **sink_kw,
     )
     stream = (
         spark.readStream.schema(feed_schema)
-        .option("pathGlobFilter", docs_glob)
+        .option(
+            "pathGlobFilter",
+            _feed_glob(docs_path, "documents.parquet", "DOCS_GLOB"),
+        )
         .parquet(docs_path)
+        .select(*feed_cols)
     )
-    if versioned and not versionless:
-        stream = stream.select(
-            "doc_id",
-            F.coalesce(F.col(ver).cast("long"), F.lit(0)).alias("version"),
-            "text",
-        )
-    elif versioned:
-        stream = stream.select(
-            "doc_id", F.lit(0).cast("long").alias("version"), "text"
-        )
+    query = _start(stream, sink, ckpt, drain)
+    return [query], f"state at {state_dir}, checkpoint at {ckpt}"
+
+
+@dataclass(frozen=True)
+class _IndexFeed:
+    """What tells the two index families' launchers apart: env names,
+    the id column, and the payload column with its type."""
+
+    path_env: str
+    state_env: str
+    default_state_dir: str
+    table_file: str
+    glob_env: str
+    version_env: str
+    id_col: str
+    payload_col: str
+    payload_type: str
+    # how first-wins admission fails on a feed missing its version column
+    consequence: str
+    needs_centroids: bool
+
+
+_ANN_FEED = _IndexFeed(
+    "EMB_PATH", "ANN_STATE_DIR", "/tmp/stream-cdc-spark-ann",
+    "embeddings.parquet", "EMB_GLOB", "EMB_VERSION_COL",
+    "vec_id", "embedding", "array<float>",
+    "drop every re-embedding as a redelivery", True,
+)
+_RETRIEVAL_FEED = _IndexFeed(
+    "DOCS_PATH", "RETR_STATE_DIR", "/tmp/stream-cdc-spark-retr",
+    "documents.parquet", "DOCS_GLOB", "RETR_VERSION_COL",
+    "doc_id", "text", "string",
+    "drop every update as a redelivery", False,
+)
+
+
+def _index_main(feed: _IndexFeed, spark, cfg, pipeline: str, drain: bool):
+    """PIPELINE=ann_index | retrieval_index: continuous admission of an
+    (id, payload) parquet feed into the persisted IVF index
+    (streaming/ann_index.py; CENTROIDS_PATH required) or the inverted
+    BM25/TF-IDF index (streaming/retrieval_index.py).
+    PIPELINE=<mode>_versioned: the CDC-native variant over an
+    (id, version, payload) UPSERT feed — newer images supersede prior
+    ones under the version-max read rule. A feed missing the version
+    column FAILS LOUDLY (_require_version_column); <VERSION_ENV>=
+    (explicitly empty) opts a version-less feed in as version 0
+    (insert-only first-wins until updates appear).
+    DELETES_PATH adds the deletion feed (_maybe_delete_stream)."""
+    versioned = pipeline.endswith("_versioned")
+    path = os.environ.get(feed.path_env, "/root/testdata/sf0.001")
+    state_dir = os.environ.get(feed.state_env, feed.default_state_dir)
+    ckpt = os.environ.get("CHECKPOINT_DIR", state_dir + "-ckpt")
+    if feed.needs_centroids:
+        extra = {"centroids_path": os.environ.get("CENTROIDS_PATH", "")}
     else:
-        stream = stream.select("doc_id", "text")
-    writer = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", ckpt)
+        extra = {}
+    sink = sink_registry.create(
+        pipeline, state_dir=state_dir, **extra, **_compact_kw(), **_bucketed_kw()
     )
-    # deletion feed first — orphan-query rule, see _ann_index_main
-    del_query = _maybe_delete_stream(spark, state_dir, "doc_id", ckpt, drain)
-    query = (writer.trigger(availableNow=True) if drain else writer).start()
+    glob = _feed_glob(path, feed.table_file, feed.glob_env)
+    ver = os.environ.get(feed.version_env, "version")
+    payload = f"{feed.payload_col} {feed.payload_type}"
+    if versioned and ver:
+        _require_version_column(
+            spark, path, glob, ver, feed.version_env, feed.consequence
+        )
+        schema = f"{feed.id_col} bigint, {ver} bigint, {payload}"
+        version = [
+            F.coalesce(F.col(ver).cast("long"), F.lit(0)).alias("version")
+        ]
+    else:
+        schema = f"{feed.id_col} bigint, {payload}"
+        version = [F.lit(0).cast("long").alias("version")] if versioned else []
+    stream = (
+        spark.readStream.schema(schema)
+        .option("pathGlobFilter", glob)
+        .parquet(path)
+        .select(feed.id_col, *version, feed.payload_col)
+    )
+    del_query = _maybe_delete_stream(spark, state_dir, feed.id_col, ckpt, drain)
+    query = _start(stream, sink, ckpt, drain)
+    return [query, del_query], f"state at {state_dir}, checkpoint at {ckpt}"
 
-    def _stop(signum, frame):
-        print(f"signal {signum}: stopping {mode}", file=sys.stderr)
-        query.stop()
-        if del_query is not None:
-            del_query.stop()
 
-    signal.signal(signal.SIGINT, _stop)
-    signal.signal(signal.SIGTERM, _stop)
-    _await_streams(spark, [query, del_query], drain)
-    print(f"{mode} stopped; state at {state_dir}, checkpoint at {ckpt}")
-    return 0
-
-
-def _cdc_full_main(cfg) -> int:
+def _cdc_full_main(spark, cfg, pipeline: str, drain: bool):
     """PIPELINE=cdc_full: the composed production pipeline — one typed
     CDC envelope feed (event_type, gtid_seq, content struct with
     doc_id/text/embedding) driving the curation quality gate, the
@@ -520,17 +467,15 @@ def _cdc_full_main(cfg) -> int:
       COMPACT_EVERY / COMPACT_MAJOR_EVERY / STATE_BUCKETED /
       STATE_NUM_BUCKETS                    shared state knobs
     """
-    from stream_cdc_spark.sources import sink_registry
+    from pyspark.sql.types import StructType
+
     from stream_cdc_spark.streaming.cdc_full import CDC_FULL_FEED_SCHEMA
 
-    spark = get_spark(app_name="stream-cdc-spark-cdc-full")
-    spark.sparkContext.setLogLevel(cfg.log_level)
     events_path = os.environ.get("EVENTS_PATH", "/root/testdata/sf0.001")
     state_dir = os.environ.get(
         "CDC_STATE_DIR", "/tmp/stream-cdc-spark-cdc-full"
     )
     ckpt = os.environ.get("CHECKPOINT_DIR", state_dir + "-ckpt")
-    drain = os.environ.get("DRAIN_AND_EXIT", "0") == "1"
     # the registry-created sink is the pipeline OBJECT's foreach_batch;
     # keep the object for the deletion feed's two-index fan-out
     pipe = sink_registry.create(
@@ -538,15 +483,18 @@ def _cdc_full_main(cfg) -> int:
         state_dir=state_dir,
         centroids_path=os.environ.get("CENTROIDS_PATH", ""),
         min_tokens=int(os.environ.get("MIN_TOKENS", "5")),
-        compact_every=int(os.environ.get("COMPACT_EVERY", "16")),
-        major_every=int(os.environ.get("COMPACT_MAJOR_EVERY", "0")),
         _return_pipeline=True,
+        **_compact_kw(),
         **_bucketed_kw(),
     )
     events_glob = os.environ.get("EVENTS_GLOB", "*.parquet")
     # loud startup guard (best effort, like _require_version_column): a
-    # feed missing any envelope column reads all-null under the forced
-    # schema; the sink ALSO fails per-batch on null upsert versions
+    # feed missing an envelope column, or a field of the content struct
+    # (ADVICE r13), reads it as all-null under the forced schema. Null
+    # versions break exactly-once admission and vanish from probes; null
+    # doc_ids/embeddings permanently occupy first-wins admission slots a
+    # corrected redelivery can never reclaim. The sink ALSO fails
+    # per-batch on null versions, ids and embeddings.
     try:
         feed_schema = (
             spark.read.option("pathGlobFilter", events_glob)
@@ -556,122 +504,72 @@ def _cdc_full_main(cfg) -> int:
     except Exception:
         feed_schema = None  # no files yet: nothing to contradict
     if feed_schema is not None:
-        avail = set(feed_schema.names)
-        missing = {"event_type", "gtid_seq", "content"} - avail
-        if missing:
-            raise ValueError(
-                f"cdc_full feed at {events_path!r} has columns "
-                f"{sorted(avail)} but the envelope schema needs "
-                f"{sorted(missing)} — a forced schema would read them "
-                f"as all-null (upserts with null versions break "
-                f"exactly-once admission and vanish from probes)."
-            )
-        # the CONTENT STRUCT's fields too (ADVICE r13): a feed whose
-        # content struct lacks embedding (or doc_id/text) reads that
-        # field as all-null under the forced schema — the gate still
-        # passes on text while the ANN leg admits null vectors whose
-        # first-wins slots a corrected redelivery can never reclaim.
-        # The sink ALSO fails per-batch on null ids/embeddings.
-        from pyspark.sql.types import StructType
-
-        content_t = feed_schema["content"].dataType
-        content_fields = (
-            set(content_t.names)
-            if isinstance(content_t, StructType)
-            else set()
+        names = set(feed_schema.names)
+        content_t = feed_schema["content"].dataType if "content" in names else None
+        content = (
+            set(content_t.names) if isinstance(content_t, StructType) else set()
         )
-        cmissing = {"doc_id", "text", "embedding"} - content_fields
-        if cmissing:
-            raise ValueError(
-                f"cdc_full feed at {events_path!r} has content fields "
-                f"{sorted(content_fields)} but the envelope schema "
-                f"needs {sorted(cmissing)} — a forced schema would "
-                f"read them as all-null (null doc_ids/embeddings "
-                f"would permanently occupy first-wins admission slots "
-                f"and surface null-cosine candidates, silently)."
-            )
+        for what, have, need in (
+            ("columns", names, {"event_type", "gtid_seq", "content"}),
+            ("content fields", content, {"doc_id", "text", "embedding"}),
+        ):
+            if need - have:
+                raise ValueError(
+                    f"cdc_full feed at {events_path!r} has {what} "
+                    f"{sorted(have)} but the envelope schema needs "
+                    f"{sorted(need - have)} — a forced schema would read "
+                    f"them as all-null and silently corrupt first-wins "
+                    f"admission."
+                )
     stream = (
         spark.readStream.schema(CDC_FULL_FEED_SCHEMA)
         .option("pathGlobFilter", events_glob)
         .parquet(events_path)
     )
-    writer = (
-        stream.writeStream.foreachBatch(pipe.foreach_batch)
-        .option("checkpointLocation", ckpt)
-    )
-    # deletion feed first — orphan-query rule, see _ann_index_main
     del_query = _maybe_delete_stream(
         spark, state_dir, "doc_id", ckpt, drain, sink_fn=pipe.delete_batch
     )
-    query = (writer.trigger(availableNow=True) if drain else writer).start()
+    query = _start(stream, pipe.foreach_batch, ckpt, drain)
+    return [query, del_query], f"state at {state_dir}, checkpoint at {ckpt}"
 
-    def _stop(signum, frame):
-        print(f"signal {signum}: stopping cdc_full", file=sys.stderr)
-        query.stop()
-        if del_query is not None:
-            del_query.stop()
 
-    signal.signal(signal.SIGINT, _stop)
-    signal.signal(signal.SIGTERM, _stop)
-    _await_streams(spark, [query, del_query], drain)
-    print(f"cdc_full stopped; state at {state_dir}, checkpoint at {ckpt}")
-    return 0
+MODES = {
+    "cdc": _cdc_main,
+    "curation": _curation_main,
+    "lsh_dedup": _curation_main,
+    "ann_index": partial(_index_main, _ANN_FEED),
+    "ann_index_versioned": partial(_index_main, _ANN_FEED),
+    "retrieval_index": partial(_index_main, _RETRIEVAL_FEED),
+    "retrieval_index_versioned": partial(_index_main, _RETRIEVAL_FEED),
+    "cdc_full": _cdc_full_main,
+}
 
 
 def main() -> int:
     cfg = AppConfig.load()
     pipeline = os.environ.get("PIPELINE", "cdc")
-    if pipeline in ("curation", "lsh_dedup"):
-        return _curation_main(cfg, pipeline)
-    if pipeline == "cdc_full":
-        return _cdc_full_main(cfg)
-    if pipeline == "ann_index":
-        return _ann_index_main(cfg)
-    if pipeline == "ann_index_versioned":
-        return _ann_index_main(cfg, versioned=True)
-    if pipeline == "retrieval_index":
-        return _retrieval_index_main(cfg)
-    if pipeline == "retrieval_index_versioned":
-        return _retrieval_index_main(cfg, versioned=True)
-    spark = get_spark(app_name="stream-cdc-spark-pipeline")
+    launch = MODES.get(pipeline)
+    if launch is None:
+        raise ValueError(
+            f"unknown PIPELINE={pipeline!r}; valid modes: "
+            f"{', '.join(MODES)}"
+        )
+    app = "pipeline" if pipeline == "cdc" else pipeline.replace("_", "-")
+    spark = get_spark(app_name=f"stream-cdc-spark-{app}")
     spark.sparkContext.setLogLevel(cfg.log_level)
-
-    ds_type = os.environ.get("DS_TYPE", "cdc_replay")
-    ds_path = os.environ.get(
-        "DS_PATH", "/root/testdata/sf0.001/events.parquet"
-    )
-    queue_dir = os.environ.get("QUEUE_DIR", "/tmp/stream-cdc-spark-queue")
-    ckpt = os.environ.get("CHECKPOINT_DIR", "/tmp/stream-cdc-spark-ckpt")
     drain = os.environ.get("DRAIN_AND_EXIT", "0") == "1"
-
-    if ds_type == "cdc_replay":
-        source = datasource_registry.create(
-            ds_type, spark=spark, path=ds_path, batchEvents=cfg.batch_size * 1000
-        )
-    else:
-        source = datasource_registry.create(
-            ds_type, spark=spark, sf_dir=os.path.dirname(ds_path)
-        )
-
-    pipe = CdcPipeline(
-        spark,
-        source,
-        foreach_batch_writer(lambda: FileQueue(queue_dir)),
-        checkpoint_dir=ckpt,
-        config=cfg,
-        filters=FilterChain(),
-    )
-    query = pipe.start(available_now=drain)
+    queries, where = launch(spark, cfg, pipeline, drain)
 
     def _stop(signum, frame):  # O27 graceful shutdown
-        print(f"signal {signum}: stopping query", file=sys.stderr)
-        query.stop()
+        print(f"signal {signum}: stopping {pipeline}", file=sys.stderr)
+        for q in queries:
+            if q is not None:
+                q.stop()
 
     signal.signal(signal.SIGINT, _stop)
     signal.signal(signal.SIGTERM, _stop)
-
-    pipe.await_and_stop()
-    print(f"pipeline stopped; queue at {queue_dir}, checkpoint at {ckpt}")
+    _await_streams(spark, queries, drain)
+    print(f"{pipeline} stopped; {where}")
     return 0
 
 

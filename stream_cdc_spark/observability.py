@@ -1,8 +1,8 @@
-"""Observability: per-query execution metrics and an engine logger.
+"""Observability: per-query execution metrics and streaming progress.
 
 Parity surface for the reference's profiling harness
-(stream_cdc/profiling/profiler.py:66-100, profile_app.py:70-140) and
-logger (stream_cdc/utils/logger.py:1-82), re-expressed for Spark: instead
+(stream_cdc/profiling/profiler.py:66-100, profile_app.py:70-140; the
+logger parity lives in logging_utils), re-expressed for Spark: instead
 of cProfile around single-process functions, pull the SQL metrics Spark
 already aggregates per execution (shuffle bytes, scan bytes/files, spills,
 output rows) out of the SQLAppStatusStore — works headless (spark.ui
@@ -12,30 +12,12 @@ the numbers are the executors' own, not a driver-side sample.
 
 from __future__ import annotations
 
-import logging
 import re
 import time
 from dataclasses import dataclass, field
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
-
-_LOG_FORMAT = "%(asctime)s - %(name)s - %(levelname)s - %(message)s"
-
-
-def get_logger(name: str = "stream_cdc_spark", level: int = logging.INFO) -> logging.Logger:
-    """Engine logger with the reference's format (utils/logger.py:24-40):
-    timestamp - name - level - message, single stream handler, no
-    propagation doubling."""
-    logger = logging.getLogger(name)
-    if not logger.handlers:
-        h = logging.StreamHandler()
-        h.setFormatter(logging.Formatter(_LOG_FORMAT))
-        logger.addHandler(h)
-        logger.propagate = False
-    logger.setLevel(level)
-    return logger
-
 
 # SQL metric values arrive human-formatted ("26.5 KiB", "1,000",
 # "1.0 s (0 ms, 2 ms, 5 ms)"); normalize to plain numbers (bytes / ms / count).
@@ -139,29 +121,12 @@ class QueryMetricsCollector:
                     sums[key] = sums.get(key, 0.0) + v
         return sums, count
 
-    def measure(self, name: str, df: DataFrame) -> QueryMetrics:
-        before = self._latest_execution_id()
-        t0 = time.perf_counter()
-        rows = df.collect()
-        wall = time.perf_counter() - t0
-        after = self._latest_execution_id()
-        sums, count = self._metrics_between(before, after)
-        return QueryMetrics(
-            name=name,
-            wall_s=wall,
-            result_rows=len(rows),
-            executions=count,
-            sums=sums,
-        )
-
-    def measure_lazy(self, name: str, make_df) -> QueryMetrics:
-        """``measure`` for queries whose CONSTRUCTION already executes
-        Spark jobs (the incremental-index drains run eager
-        localCheckpoint folds inside their builder): the execution-id
-        window opens BEFORE ``make_df()`` runs, so the drain's
-        executions and shuffle/scan sums land in the metrics alongside
-        the final collect — wall time covers build + collect too.
-        ``measure(name, builder(...))`` would charge only the probe."""
+    def measure(self, name: str, make_df) -> QueryMetrics:
+        """Time ``make_df().collect()`` and attribute every SQL execution
+        it triggers. The window opens BEFORE the zero-arg builder runs,
+        so a builder that already executes Spark jobs (eager registry
+        queries) is charged in full; pass ``lambda: df`` to time only the
+        collect of a prebuilt DataFrame."""
         before = self._latest_execution_id()
         t0 = time.perf_counter()
         rows = make_df().collect()
@@ -216,7 +181,7 @@ class QueryMetricsCollector:
         self, name: str, df: DataFrame
     ) -> tuple[QueryMetrics, list[dict[str, Any]]]:
         before = self._latest_execution_id()
-        qm = self.measure(name, df)
+        qm = self.measure(name, lambda: df)
         after = self._latest_execution_id()
         return qm, self.node_breakdown(before, after)
 

@@ -81,6 +81,7 @@ class CdcPipeline:
         self.config = config or AppConfig()
         self.filters = filters or FilterChain()
         self.query = None
+        self.drain = False
 
     def transformed(self) -> DataFrame:
         """Apply the filter chain and serialize each event to a JSON payload
@@ -95,19 +96,21 @@ class CdcPipeline:
     def start(self, available_now: bool = True):
         """Start the streaming query.
 
-        available_now=True drains everything currently in the log then
-        stops — the deterministic test/replay mode. False uses the
-        ProcessingTime trigger from config (production pacing, O15).
+        available_now=True is the drain mode (test/replay/backfill): run
+        on the config's ProcessingTime trigger until await_and_stop finds
+        the log consumed. Not Spark's availableNow trigger: over a
+        rate-limited source such as cdc_replay it fixes its end offset at
+        the first rate-limited batch and stops there, silently leaving
+        the rest of the log unread. False runs on the same trigger until
+        stopped (production pacing, O15).
         """
         writer = (
             self.transformed()
             .writeStream.foreachBatch(self.sink_fn)
             .option("checkpointLocation", self.checkpoint_dir)
+            .trigger(**self.config.trigger())
         )
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        else:
-            writer = writer.trigger(**self.config.trigger())
+        self.drain = available_now
         self.query = writer.start()
         from stream_cdc_spark.logging_utils import get_logger
 
@@ -119,11 +122,15 @@ class CdcPipeline:
         return self.query
 
     def await_and_stop(self, timeout: int | None = None) -> None:
-        """Graceful shutdown (O27): drain, then stop. With availableNow the
-        query terminates itself once the log is consumed."""
+        """Graceful shutdown (O27). Drain mode: process everything the
+        source has now, then stop (``timeout`` does not apply). Otherwise
+        await termination for up to ``timeout`` seconds, then stop."""
         if self.query is None:
             return
-        self.query.awaitTermination(timeout)
+        if self.drain:
+            self.query.processAllAvailable()
+        else:
+            self.query.awaitTermination(timeout)
         if self.query.isActive:
             self.query.stop()
         from stream_cdc_spark.logging_utils import get_logger

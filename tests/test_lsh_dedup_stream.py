@@ -8,11 +8,7 @@ import os
 import pandas as pd
 from pyspark.sql import functions as F
 
-from stream_cdc_spark.streaming.stateful import (
-    _bucket_matches,
-    lsh_dedup_stream,
-    transform_with_state_available,
-)
+from stream_cdc_spark.streaming.stateful import _bucket_matches, lsh_dedup_stream
 from stream_cdc_spark.operators import dedup
 from stream_cdc_spark.tables import load
 from tests.conftest import SF_SMALL
@@ -83,20 +79,37 @@ def test_bucket_matches_seen_list_is_bounded():
     assert seen[-1] == 209  # FIFO keeps the most recent ids
 
 
-@pytest.mark.slow
-def test_stream_matches_batch_candidates_across_restart(spark, tmp_path):
+@pytest.mark.parametrize(
+    "max_doc_id, n_slices",
+    [
+        pytest.param(None, 4, marks=pytest.mark.slow, id="all_docs"),
+        pytest.param(150, 3, id="first_150_docs"),
+    ],
+)
+def test_stream_matches_batch_candidates_across_restart(
+    spark, tmp_path, max_doc_id, n_slices
+):
     """Drain the documents table through lsh_dedup_stream in two runs with
     a checkpoint restart; the distinct emitted pair set must equal the
     batch minhash_lsh_pairs candidates at the same >= 0.8 signature
-    agreement (same hash expression, so values line up exactly)."""
+    agreement (same hash expression, so values line up exactly). The
+    first-150-docs variant is the fast-tier restart gate."""
+    # the no-option call builds a plan, over an unbounded source too
+    rate = spark.readStream.format("rate").load().selectExpr(
+        "value as doc_id", "cast(value as string) as text"
+    )
+    assert lsh_dedup_stream(rate) is not None
+
     d = load(spark, SF_SMALL, "documents").select("doc_id", "text")
+    if max_doc_id is not None:
+        d = d.filter(F.col("doc_id") < max_doc_id)
     indir, ckpt, outdir = (
         str(tmp_path / p) for p in ("in", "ckpt", "out")
     )
     os.makedirs(indir, exist_ok=True)
 
     parts = (
-        d.repartition(4)
+        d.repartition(n_slices)
         .rdd.mapPartitionsWithIndex(lambda i, it: ((i, list(it)),))
         .collect()
     )
@@ -116,10 +129,7 @@ def test_stream_matches_batch_candidates_across_restart(spark, tmp_path):
             .parquet(indir + "/slice=*")
         )
         q = (
-            lsh_dedup_stream(
-                stream,
-                use_transform_with_state=transform_with_state_available(),
-            )
+            lsh_dedup_stream(stream)
             .writeStream.foreachBatch(emit)
             .outputMode("update")
             .option("checkpointLocation", ckpt)
@@ -128,10 +138,11 @@ def test_stream_matches_batch_candidates_across_restart(spark, tmp_path):
         )
         q.awaitTermination(300)
 
-    for i, rows in parts[:2]:
+    half = n_slices // 2
+    for i, rows in parts[:half]:
         write_slice(i, rows)
     run()
-    for i, rows in parts[2:]:
+    for i, rows in parts[half:]:
         write_slice(i, rows)
     run()
 
@@ -148,20 +159,3 @@ def test_stream_matches_batch_candidates_across_restart(spark, tmp_path):
     }
     assert got == want
     assert len(want) > 0  # the corpus genuinely exercises the operator
-
-
-def test_implicit_fallback_drain_is_gated(spark):
-    """Without transformWithState, the slow per-bucket fallback must be
-    EXPLICIT opt-in (round-5: <87 docs/s on bulk drains) — the implicit
-    path raises and points at LshDedupSnapshot."""
-    import pytest
-
-    if transform_with_state_available():
-        pytest.skip("fast path available on this runtime")
-    d = spark.readStream.format("rate").load().selectExpr(
-        "value as doc_id", "cast(value as string) as text"
-    )
-    with pytest.raises(RuntimeError, match="LshDedupSnapshot"):
-        lsh_dedup_stream(d)
-    # the explicit opt-in still builds a plan
-    assert lsh_dedup_stream(d, use_transform_with_state=False) is not None

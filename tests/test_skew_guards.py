@@ -111,14 +111,14 @@ def test_hot_shingle_guard_cuts_shuffle_volume(spark, skewed_docs):
     fewer rows through its operators than the uncapped one (the insurance
     premium buys a d^2 saving when the skew is real)."""
     collector = QueryMetricsCollector(spark)
-    capped = collector.measure(
-        "capped",
-        dedup.ngram_jaccard_pairs(skewed_docs, threshold=0.5, max_shingle_df=CAP),
+    capped_df = dedup.ngram_jaccard_pairs(
+        skewed_docs, threshold=0.5, max_shingle_df=CAP
     )
-    uncapped = collector.measure(
-        "uncapped",
-        dedup.ngram_jaccard_pairs(skewed_docs, threshold=0.5, max_shingle_df=None),
+    uncapped_df = dedup.ngram_jaccard_pairs(
+        skewed_docs, threshold=0.5, max_shingle_df=None
     )
+    capped = collector.measure("capped", lambda: capped_df)
+    uncapped = collector.measure("uncapped", lambda: uncapped_df)
     cr = capped.sums.get("operator_rows", 0)
     ur = uncapped.sums.get("operator_rows", 0)
     # the uncapped join alone emits >= 28k extra rows; detection overhead

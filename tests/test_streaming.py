@@ -281,3 +281,46 @@ def test_stream_static_enrichment_join(spark, tmp_path):
         .collect()
     }
     assert got == want and len(got) >= 3
+
+
+def test_cli_drain_delivers_every_event_once(spark, tmp_path, monkeypatch):
+    """DRAIN_AND_EXIT=1 in the default cdc mode over the rate-limited
+    cdc_replay source (BATCH_SIZE=2 -> 2000-event triggers over a
+    10,000-event log) must deliver the whole log exactly once, not just
+    the first rate-limited batch."""
+    from stream_cdc_spark import main as M
+    from tests.conftest import SF_MED
+
+    qdir = str(tmp_path / "cli-q")
+    monkeypatch.delenv("PIPELINE", raising=False)
+    monkeypatch.setenv("DS_PATH", f"{SF_MED}/events.parquet")
+    monkeypatch.setenv("BATCH_SIZE", "2")
+    monkeypatch.setenv("FLUSH_INTERVAL", "0.5")
+    monkeypatch.setenv("DRAIN_AND_EXIT", "1")
+    monkeypatch.setenv("QUEUE_DIR", qdir)
+    monkeypatch.setenv("CHECKPOINT_DIR", str(tmp_path / "cli-ckpt"))
+    assert M.main() == 0
+
+    seqs = [json.loads(m["MessageBody"])["seq"] for m in FileQueue(qdir).drain()]
+    want = sorted(
+        r.event_id for r in load(spark, SF_MED, "events").select("event_id").collect()
+    )
+    assert len(want) == 10_000
+    assert sorted(seqs) == want
+
+
+def test_cli_rejects_unknown_pipeline(tmp_path, monkeypatch):
+    """An unknown PIPELINE must fail loudly, naming the valid modes,
+    instead of silently running the default cdc mode."""
+    import pytest
+
+    from stream_cdc_spark import main as M
+
+    monkeypatch.setenv("PIPELINE", "ann-index")
+    # were the default mode to run, make it a short finite drain
+    monkeypatch.setenv("DS_PATH", f"{SF_SMALL}/events.parquet")
+    monkeypatch.setenv("DRAIN_AND_EXIT", "1")
+    monkeypatch.setenv("QUEUE_DIR", str(tmp_path / "q"))
+    monkeypatch.setenv("CHECKPOINT_DIR", str(tmp_path / "ckpt"))
+    with pytest.raises(ValueError, match="ann-index.*ann_index_versioned"):
+        M.main()
